@@ -296,6 +296,7 @@ def main() -> None:
         shuffle_partitions=shuffle_parts,
     )
     spark.sparkContext.setLogLevel("ERROR")
+    spark_cpus = spark.sparkContext.defaultParallelism  # task slots; read before stop()
 
     # Untimed warmup pass: JIT + codegen compile + OS page cache.
     for name in MEASURED:
@@ -493,6 +494,10 @@ def main() -> None:
         "measurement_attempts": attempts,
         # host contention context for the wall-clock columns
         "loadavg": list(os.getloadavg()),
+        # core counts the wall-clock columns were taken on: Spark's task
+        # slots (local[N]) and the host's logical cpus
+        "cpus": spark_cpus,
+        "os_cpus": os.cpu_count(),
         "rel_spread": spreads,
         "duckdb_queries": duck,
         "duckdb_queries_median": duck_medians,

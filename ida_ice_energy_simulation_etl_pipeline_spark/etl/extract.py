@@ -157,7 +157,11 @@ def extract_runs(
     # scandir proves it) each reader does ONE recursive tree listing with
     # a filename filter; otherwise fall back to a driver-side glob feeding
     # explicit file lists.  Reader builds still overlap on driver threads
-    # (independent FileIndex construction).
+    # (independent FileIndex construction).  Past
+    # parallelPartitionDiscovery.threshold directories (32 by default)
+    # Spark lists through a Spark job per reader; a local session raises
+    # the threshold (session.build_conf), so there the listing stays on
+    # the driver and building the readers submits no job at all.
     clean_root = all(
         p.name.startswith("run_") for p in runs_dir.iterdir()
     )
@@ -230,6 +234,12 @@ def extract_runs_from_zips(
     parquet ONCE (this function is that landing step).  Per-zip errors
     are captured, bad archives skipped, and the same >50 % circuit
     breaker applies (reference src/etl/extract/__init__.py:96-137).
+
+    The returned frames read lazily from the staging tree, so this
+    function cannot remove it: the caller owns it (``run_pipeline``
+    stages under its output directory and removes the tree once the star
+    has landed).  Without ``staging_dir`` the tree is a fresh
+    ``mkdtemp`` directory that the caller must remove.
     """
     zips_dir = Path(zips_dir)
     zip_paths = sorted(zips_dir.glob("run_*.zip"))

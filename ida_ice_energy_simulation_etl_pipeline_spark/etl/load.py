@@ -184,6 +184,25 @@ def load_to_parquet(
     return paths
 
 
+def reread_parquet(
+    spark: SparkSession, written: dict[str, DataFrame], out_dir: str | Path
+) -> dict[str, DataFrame]:
+    """Read back tables that ``load_to_parquet`` wrote under ``out_dir``,
+    each with the schema of the frame it was written from.
+
+    A bare ``spark.read.parquet`` runs a footer-reading job per table to
+    infer a schema we already hold; pinning it makes the re-read pure
+    planning (no job).  The schema is the WRITTEN frame's, never the
+    catalog's, so ``check_schema`` still compares what the transform
+    produced against ``STAR_SCHEMAS``.  Column order matches inference:
+    partition columns (``partition_facts``) come last either way."""
+    out_dir = Path(out_dir)
+    return {
+        t: spark.read.schema(df.schema).parquet(str(out_dir / t))
+        for t, df in written.items()
+    }
+
+
 def load_to_warehouse(
     spark: SparkSession,
     star: dict[str, DataFrame],

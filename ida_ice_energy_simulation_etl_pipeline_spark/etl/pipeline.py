@@ -24,7 +24,12 @@ from .extract import (
     extract_runs_from_zips,
     list_runs,
 )
-from .load import load_to_parquet, load_to_warehouse, register_temp_views
+from .load import (
+    load_to_parquet,
+    load_to_warehouse,
+    register_temp_views,
+    reread_parquet,
+)
 from .transform import transform_all
 from .validate import validate_all
 
@@ -52,14 +57,13 @@ def run_pipeline(
 ) -> dict:
     """Full batch run; returns the validation report + artifact paths."""
     output_dir = Path(output_dir)
-    extractor = extract_runs_from_zips if zipped else extract_runs
-    # check_runs=False: the >50%-unreadable circuit breaker re-runs below
-    # against the LANDED fact_meters — same gate, but the distinct runs on
-    # pruned parquet instead of costing a dedicated full-CSV scan job.
-    entities = extractor(spark, input_dir, check_runs=False)
+    # ZIP bundles unzip into a staging tree under the output directory;
+    # nothing reads the raw CSVs once the star has landed, so it is
+    # removed right after load_to_parquet, on every exit path.
+    raw_staging = output_dir / "raw._staging"
+    if zipped:
+        shutil.rmtree(raw_staging, ignore_errors=True)  # a crashed run's leftovers
     expected_run_ids = list_runs(input_dir)
-
-    star = transform_all(entities, time_key_strategy=time_key_strategy)
 
     # Land → validate → publish.  The conformed star is computed EXACTLY
     # once — written straight to a staging directory — and every
@@ -72,37 +76,66 @@ def run_pipeline(
     # the published path unless the gate passes.  This is also the shape
     # that survives 100 TB, where caching the star in executor memory is
     # not an option.
+    #
+    # Every job from here on touches data.  The landed and the published
+    # star are re-read with the schemas of the frames just written
+    # (reread_parquet), so neither re-read runs a schema-inference job,
+    # and the local session lists files on the driver (session.build_conf)
+    # instead of through a listing job per reader.
     staging = output_dir / "parquet._staging"
-    # Dims sit in every fact's lineage (broadcast joins), so without
-    # pinning, each fact write re-derives the distinct/window dim builds
-    # from raw CSV.  Cache + materialize them up front (concurrently —
-    # they are independent small jobs); they are dim-scale by construction
-    # so executor memory is never a concern, 100 TB facts included.
-    dims = [t for t in star if t.startswith("dim_")]
-    for t in dims:
-        star[t] = star[t].cache()
-    with ThreadPoolExecutor(max_workers=len(dims) or 1) as pool:
-        list(pool.map(lambda t: star[t].count(), dims))
-    # Time-range queries dominate the analytic surface (monthly rollups,
-    # gap scans, as-of lookups), so fact files are range-clustered on
-    # time_key when requested: disjoint per-file min/max intervals let
-    # pushed-down time predicates skip whole files (see load_to_parquet).
-    sort_within = (
-        {t: ["time_key"] for t in ("fact_meters", "fact_hvac", "fact_zone_conditions")}
-        if cluster_facts
-        else None
-    )
+    dims: list[str] = []
     try:
+        # check_runs=False: the >50%-unreadable circuit breaker re-runs
+        # below against the LANDED fact_meters — same gate, but the
+        # distinct runs on pruned parquet instead of costing a dedicated
+        # full-CSV scan job.
+        entities = (
+            extract_runs_from_zips(
+                spark, input_dir, staging_dir=raw_staging, check_runs=False
+            )
+            if zipped
+            else extract_runs(spark, input_dir, check_runs=False)
+        )
+        star = transform_all(entities, time_key_strategy=time_key_strategy)
+        # Dims sit in every fact's lineage (broadcast joins), so without
+        # pinning, each fact write re-derives the distinct/window dim
+        # builds from raw CSV.  Cache + materialize them up front
+        # (concurrently — they are independent small jobs); they are
+        # dim-scale by construction so executor memory is never a
+        # concern, 100 TB facts included.
+        dims = [t for t in star if t.startswith("dim_")]
+        for t in dims:
+            star[t] = star[t].cache()
+        with ThreadPoolExecutor(max_workers=len(dims) or 1) as pool:
+            list(pool.map(lambda t: star[t].count(), dims))
+        # Time-range queries dominate the analytic surface (monthly
+        # rollups, gap scans, as-of lookups), so fact files are
+        # range-clustered on time_key when requested: disjoint per-file
+        # min/max intervals let pushed-down time predicates skip whole
+        # files (see load_to_parquet).
+        sort_within = (
+            {t: ["time_key"] for t in ("fact_meters", "fact_hvac", "fact_zone_conditions")}
+            if cluster_facts
+            else None
+        )
         load_to_parquet(
             star, staging, partition_facts=partition_facts, sort_within=sort_within
         )
     finally:
         for t in dims:
             star[t].unpersist()
-    landed = {t: spark.read.parquet(str(staging / t)) for t in star}
+        if zipped:
+            shutil.rmtree(raw_staging, ignore_errors=True)
+    landed = reread_parquet(spark, star, staging)
 
-    check_run_coverage(landed["fact_meters"], expected_run_ids)
-    report = validate_all(landed, range_rules=range_rules)
+    # The run-coverage breaker overlaps the gate's own jobs, but its
+    # verdict is taken first: an ExtractionError outranks a failed gate.
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        coverage = pool.submit(
+            check_run_coverage, landed["fact_meters"], expected_run_ids
+        )
+        report = validate_all(landed, range_rules=range_rules)
+        coverage.result()
     if not report["is_valid"] and not force:
         raise ValidationGateError(report)  # staging left behind for triage
 
@@ -111,7 +144,7 @@ def run_pipeline(
         shutil.rmtree(final)
     staging.rename(final)
     paths = {t: str(final / t) for t in star}
-    published = {t: spark.read.parquet(p) for t, p in paths.items()}
+    published = reread_parquet(spark, star, final)
 
     if to_warehouse:
         load_to_warehouse(spark, published)

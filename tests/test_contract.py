@@ -118,28 +118,38 @@ def test_bench_cli_emits_one_json_line(tmp_path):
     detail = json.load(open(os.path.join(REPO, "bench_detail.json")))
     assert set(detail["duckdb_queries"]) == set(doc["queries"])
     assert all(isinstance(v, float) for v in detail["duckdb_queries"].values())
+    assert isinstance(detail["cpus"], int) and detail["cpus"] > 0
+    assert isinstance(detail["os_cpus"], int) and detail["os_cpus"] > 0
     assert doc["sf"] == 0.001
 
 
 def test_session_conf_local_vs_cluster():
-    """Uncompressed shuffle + zero locality wait apply ONLY to known-local
-    masters; a cluster deploy (master=None, injected by spark-submit)
-    keeps Spark's network-appropriate defaults.  extra_conf overrides
-    everything."""
+    """Uncompressed shuffle, zero locality wait and driver-side file
+    listing apply ONLY to known-local masters; a cluster deploy
+    (master=None, injected by spark-submit) keeps Spark's
+    network-appropriate defaults.  extra_conf overrides everything."""
     from ida_ice_energy_simulation_etl_pipeline_spark.session import build_conf
 
-    local = build_conf("local[32]")
-    assert local["spark.shuffle.compress"] == "false"
-    assert local["spark.locality.wait"] == "0ms"
+    listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    for local_master in ("local[32]", "local[4]", "local[*]"):
+        local = build_conf(local_master)
+        assert local["spark.shuffle.compress"] == "false"
+        assert local["spark.locality.wait"] == "0ms"
+        # driver-side listing: far above any local run/partition count
+        assert int(local[listing]) >= 100_000, local_master
 
     for cluster_master in (None, "yarn", "spark://host:7077", "k8s://https://h"):
         conf = build_conf(cluster_master)
         assert "spark.shuffle.compress" not in conf, cluster_master
         assert "spark.locality.wait" not in conf, cluster_master
+        assert listing not in conf, cluster_master
         assert conf["spark.sql.adaptive.enabled"] == "true"
 
-    over = build_conf("local[4]", extra_conf={"spark.shuffle.compress": "true"})
+    over = build_conf(
+        "local[4]", extra_conf={"spark.shuffle.compress": "true", listing: "32"}
+    )
     assert over["spark.shuffle.compress"] == "true"
+    assert over[listing] == "32"
     assert build_conf(None, shuffle_partitions=2000)[
         "spark.sql.shuffle.partitions"
     ] == "2000"

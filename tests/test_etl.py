@@ -24,6 +24,7 @@ from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
     load_to_parquet,
     query,
     register_temp_views,
+    reread_parquet,
 )
 from ida_ice_energy_simulation_etl_pipeline_spark.etl.pipeline import (
     ValidationGateError,
@@ -369,6 +370,163 @@ def test_pipeline_gate_blocks(spark, tmp_path):
     write_run_dir(run, tmp_path)
     with pytest.raises(ValidationGateError):
         run_pipeline(spark, tmp_path, tmp_path / "out")
+
+
+def _submitted_jobs(spark, fn):
+    """(Spark jobs ``fn()`` submitted, its result): the job-id distance
+    between two marker jobs run around it.  Job ids are monotonic; each
+    marker runs in its own job group so ``statusTracker`` (filled from the
+    async listener bus) can be polled until the marker itself is listed."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker() -> int:
+        group = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 30
+        while not (ids := tracker.getJobIdsForGroup(group)):
+            assert time.monotonic() < deadline, "marker job never listed"
+            time.sleep(0.05)
+        return max(ids)
+
+    before = marker()
+    out = fn()
+    return marker() - before - 1, out
+
+
+@pytest.mark.parametrize("partition_facts", [False, True])
+def test_reread_parquet_submits_no_jobs(spark, star, tmp_path, partition_facts):
+    """Re-reading a written star with the written frames' schemas is pure
+    planning (no footer-inference job) and yields exactly what schema
+    inference yields: same columns in the same order, same types (the
+    partition column included), same rows."""
+    load_to_parquet(star, tmp_path, partition_facts=partition_facts)
+    n_jobs, pinned = _submitted_jobs(
+        spark, lambda: reread_parquet(spark, star, tmp_path)
+    )
+    assert n_jobs == 0
+    assert set(pinned) == set(star)
+    for t, df in pinned.items():
+        inferred = spark.read.parquet(str(tmp_path / t))
+        assert df.dtypes == inferred.dtypes, t
+        assert df.count() == inferred.count() == star[t].count(), t
+    # control: the bare read this replaces does submit a job
+    n_inferred, _ = _submitted_jobs(
+        spark, lambda: spark.read.parquet(str(tmp_path / "dim_time"))
+    )
+    assert n_inferred >= 1
+
+
+def test_extract_lists_many_runs_without_a_job(spark, tmp_path):
+    """More run directories than Spark's default parallel-listing
+    threshold (32): a local session still lists them on the driver, so
+    building the five entity readers submits no Spark job."""
+    generate_dataset(
+        tmp_path, buildings=tuple(f"BLDG_{i:02d}" for i in range(20)),
+        scenarios=SCENARIOS, hours=2, n_zones=1, n_ahus=1,
+    )
+    n_jobs, ents = _submitted_jobs(
+        spark, lambda: extract_runs(spark, tmp_path, check_runs=False)
+    )
+    assert n_jobs == 0
+    assert ents["meters"].count() == 40 * 2
+
+
+def test_pipeline_gate_catches_schema_drift(spark, runs_dir, tmp_path, monkeypatch):
+    """The landed re-read takes the written frame's schema, never the
+    catalog's — so a transform that drops a column still fails the gate's
+    schema check, and nothing is published."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl import pipeline
+
+    real = pipeline.transform_all
+
+    def drifted(entities, **kwargs):
+        star = real(entities, **kwargs)
+        star["fact_hvac"] = star["fact_hvac"].drop("cop_proxy")
+        return star
+
+    monkeypatch.setattr(pipeline, "transform_all", drifted)
+    out = tmp_path / "out"
+    with pytest.raises(ValidationGateError) as exc:
+        run_pipeline(spark, runs_dir, out)
+    schema = exc.value.report["checks"]["schema"]
+    assert schema["valid"] is False
+    assert schema["errors"] == ["fact_hvac: missing columns ['cop_proxy']"]
+    assert not (out / "parquet").exists()
+
+
+def _write_bad_runs(out_dir, *, as_zip=False, n_runs=4, n_empty_meters=0):
+    """``n_runs`` one-zone runs whose electric meter reads 0 (the gate's
+    plausibility check fails); the first ``n_empty_meters`` have a
+    header-only meters.csv (the run-coverage breaker counts them)."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.fixtures import (
+        generate_run,
+        write_run_dir,
+        write_run_zip,
+    )
+
+    for i in range(n_runs):
+        run = generate_run(f"BLDG_B{i}", "BASE", hours=12, n_zones=1, n_ahus=1)
+        run["meters"]["electric_kwh"] = 0.0
+        if i < n_empty_meters:
+            run["meters"] = run["meters"].iloc[0:0]
+        (write_run_zip if as_zip else write_run_dir)(run, out_dir)
+
+
+def test_pipeline_coverage_breaker_outranks_gate(spark, tmp_path, monkeypatch):
+    """The breaker runs alongside the gate's checks, but when more than
+    half the runs produced no meter rows its ExtractionError wins over the
+    ValidationGateError the same input also earns."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl import pipeline
+
+    runs = tmp_path / "runs"
+    _write_bad_runs(runs, n_empty_meters=3)
+    with pytest.raises(ExtractionError, match="3/4 runs unreadable"):
+        run_pipeline(spark, runs, tmp_path / "out")
+    assert not (tmp_path / "out" / "parquet").exists()
+    # control: without the breaker the same input fails the gate
+    monkeypatch.setattr(pipeline, "check_run_coverage", lambda *a, **k: None)
+    with pytest.raises(ValidationGateError):
+        run_pipeline(spark, runs, tmp_path / "out")
+
+
+def test_pipeline_zipped_leaves_no_staging_tree(spark, tmp_path, monkeypatch):
+    """Zipped input unzips under the output directory and is removed once
+    the star has landed — on the published path and on a gate failure —
+    and never falls back to a stray temp directory."""
+    import tempfile
+
+    def no_mkdtemp(*a, **k):
+        raise AssertionError("zipped run_pipeline must not use mkdtemp")
+
+    monkeypatch.setattr(tempfile, "mkdtemp", no_mkdtemp)
+
+    good = tmp_path / "good"
+    generate_dataset(
+        good, buildings=("BLDG_09",), scenarios=("BASE",), hours=12,
+        n_zones=2, n_ahus=1, as_zip=True,
+    )
+    out = tmp_path / "out_good"
+    result = run_pipeline(spark, good, out, zipped=True)
+    assert result["validation"]["is_valid"]
+    assert sorted(p.name for p in out.iterdir()) == [
+        "parquet", "summary.json", "validation_report.json",
+    ]
+    assert spark.read.parquet(result["parquet"]["fact_zone_conditions"]).count() == 24
+
+    bad = tmp_path / "bad"
+    _write_bad_runs(bad, as_zip=True, n_runs=1)
+    out = tmp_path / "out_bad"
+    with pytest.raises(ValidationGateError):
+        run_pipeline(spark, bad, out, zipped=True)
+    assert sorted(p.name for p in out.iterdir()) == ["parquet._staging"]
 
 
 def test_merge_upsert_parquet_touches_only_batch_partitions(spark, tmp_path):
